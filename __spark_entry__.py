@@ -18,6 +18,7 @@ from geostatssolvers_jl_spark.distances import Anisotropic, Euclidean, Haversine
 from geostatssolvers_jl_spark.grid import CartesianGrid
 from geostatssolvers_jl_spark.oracle import knn_pairs_sql
 from geostatssolvers_jl_spark.operators.idw import idw_agg_sql
+from geostatssolvers_jl_spark.session import pinned
 from geostatssolvers_jl_spark.sources import pages as pages_mod
 from geostatssolvers_jl_spark.webtext import urls as _urls
 from geostatssolvers_jl_spark.webtext.textstats import (
@@ -372,12 +373,11 @@ def _mat_zonal_cells(spark: SparkSession, sf_dir: str) -> str:
     the SAME solved surface, and each bench rep otherwise re-runs the
     whole kNN+IDW solve just to time the zone step.  sf-keyed like
     `_mat_sig`."""
-    return _materialize(
-        spark,
+    view = "zonal_cells_mat"
+    pinned(spark, view, sf_dir, lambda: spark.sql(
         f"SELECT * FROM {_zonal_cells_sql('world_grid')} _zc"
-        f"\n-- source: {sf_dir}",
-        "zonal_cells_mat",
-    )
+    ).localCheckpoint(), view=view)
+    return view
 
 
 def q_zonal_stats_concave(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -466,9 +466,10 @@ def _mat_lm_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _register(spark, sf_dir, ("documents",))
-    return _materialize_df(
-        spark, f"lm_model:{sf_dir}",
-        lambda: train_trigram_model(spark, spark.table("documents")),
+    return pinned(
+        spark, "lm_model", sf_dir,
+        lambda: train_trigram_model(
+            spark, spark.table("documents")).localCheckpoint(),
     )
 
 
@@ -584,11 +585,9 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _register(spark, sf_dir, ("documents",))
-    erel = _materialize(
-        spark,
-        synth_edges_sql("documents") + f"\n-- source: {sf_dir}",
-        "pr_edges_mat",
-    )
+    erel = "pr_edges_mat"
+    pinned(spark, erel, sf_dir, lambda: spark.sql(
+        synth_edges_sql("documents")).localCheckpoint(), view=erel)
     return spark.sql(pagerank_sql("spark", edges_rel=erel))
 
 
@@ -753,11 +752,9 @@ def q_variogram_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation is the natural reuse point).  Oracle: brute-force empirical
     + the same grid fit."""
     _register(spark, sf_dir, ("documents",))
-    emp = _materialize(
-        spark,
-        _vario_emp_sql(tiled=True) + f"\n-- source: {sf_dir}",
-        "_mat_vario_emp",
-    )
+    emp = "_mat_vario_emp"
+    pinned(spark, emp, sf_dir, lambda: spark.sql(
+        _vario_emp_sql(tiled=True)).localCheckpoint(), view=emp)
     return spark.sql(_vario_fit_over(emp))
 
 
@@ -1233,109 +1230,33 @@ def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(minhash_signature_sql("spark"))
 
 
-_MAT_CACHE: dict = {}
-_MAT_LOCK = __import__("threading").Lock()
-
-
-def _materialize(spark: SparkSession, sql: str, view: str) -> str:
-    """Force-materialize a relation under a temp view via an EAGER
-    ``localCheckpoint`` and unpersist the previous incarnation (repeated
-    entry calls would otherwise pile up stale checkpoint RDDs).
-
-    localCheckpoint — not cache+count (r7): Spark's CacheManager fails
-    to substitute an InMemoryRelation into consumers that reference the
-    view from inside a WITH clause (verified: `SELECT ... FROM view`
-    plans an InMemoryTableScan, but the same view inside a CTE-shaped
-    consumer RE-PLANS the view's full subtree — every `_mat_*` consumer
-    here is CTE-shaped, so the r6 'materialize once' views silently
-    recomputed their quadratic upstreams per query).  A checkpointed
-    DataFrame is a LogicalRDD leaf: there is no subtree to re-plan, so
-    every consumer — CTE or not — reads the materialized rows.
-
-    Keyed on (applicationId, view); the cached SESSION is checked by
-    identity — temp views are session-scoped, so a hit recorded by
-    session A must rebuild for session B (B's catalog cannot resolve
-    A's view).  Lock-guarded: the gate runs arms concurrently and an
-    unsynchronized check-then-act leaks an extra checkpoint per race.
-    Keys from OTHER applications are purged on insert (stopped contexts
-    otherwise pin DataFrames forever)."""
-    return _materialize_any(spark, sql, view, lambda: spark.sql(sql))
-
-
-def _materialize_any(spark: SparkSession, ident: str, view: str,
-                     builder) -> str:
-    """`_materialize` core: ``ident`` is the identity string a cache hit
-    must match (the SQL text, or a kernel tag + parameters for
-    DataFrame-built relations); ``builder`` produces the DataFrame."""
-    key = (spark.sparkContext.applicationId, view)
-    with _MAT_LOCK:
-        old = _MAT_CACHE.get(key)
-        if old is not None and old[0] == ident and old[2] is spark:
-            return view
-        if old is not None:
-            try:
-                old[1].unpersist()
-            except Exception:
-                pass
-            _MAT_CACHE.pop(key, None)
-        for k in [k for k in _MAT_CACHE if k[0] != key[0]]:
-            _MAT_CACHE.pop(k, None)
-        df = builder().localCheckpoint()  # eager: materializes NOW
-        df.createOrReplaceTempView(view)
-        _MAT_CACHE[key] = (ident, df, spark)
-        return view
-
-
-def _materialize_df(spark: SparkSession, name: str, builder) -> DataFrame:
-    """DataFrame-flavored `_materialize` (no temp view): one checkpointed
-    incarnation per (application, name, session), rebuilt — and the old
-    one unpersisted — when the session changes; repeated entry calls
-    reuse it instead of stacking checkpoint RDDs.  localCheckpoint for
-    the same CTE-consumer reason as `_materialize`."""
-    key = (spark.sparkContext.applicationId, f"_df:{name}")
-    with _MAT_LOCK:
-        old = _MAT_CACHE.get(key)
-        if old is not None and old[0] == name and old[2] is spark:
-            return old[1]
-        if old is not None:
-            try:
-                old[1].unpersist()
-            except Exception:
-                pass
-            _MAT_CACHE.pop(key, None)
-        df = builder().localCheckpoint()
-        _MAT_CACHE[key] = (name, df, spark)
-        return df
-
-
 def _mat_sig(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the 128-hash signature once (cached view) — Spark
+    """Materialize the 128-hash signature once (pinned view) — Spark
     inlines CTEs, so the 32 band arms would otherwise re-run the whole
     min-aggregation each (the oracle's DuckDB CTE doesn't need this).
-    The source-dir comment keys the cache to the CURRENT sf_dir: the
-    SQL reads the session `documents` view, so a same-session sf switch
-    would otherwise serve the previous dataset's cached relation.
+    The pin is keyed to the CURRENT sf_dir: the build reads the session
+    `documents` view, so a same-session sf switch would otherwise serve
+    the previous dataset's relation.
 
     Built by `dedup.minhash128_sig_kernel` (r7 second session): the SQL
     build's explode → md5 → DISTINCT → 128-min-aggregate chain measured
     ~23 s one-time at sf1.0 (bench-wall cost; per-query min-of-N never
     sees it) vs ~1–2 s for the kernel's single narrow pass — identical
     rows by integer/byte construction, pytest-pinned.  The SQL text
-    stays the cache identity AND the oracle's build recipe."""
-    from geostatssolvers_jl_spark.webtext.dedup import (
-        minhash128_sig_cte, minhash128_sig_kernel,
-    )
+    (`dedup.minhash128_sig_cte`) stays the oracle's build recipe."""
+    from geostatssolvers_jl_spark.webtext.dedup import minhash128_sig_kernel
 
-    sql = ("kernel:" + minhash128_sig_cte("spark")
-           + f"\n-- source: {sf_dir}")
-    return _materialize_any(
-        spark, sql, "mh_sig_mat",
+    view = "mh_sig_mat"
+    pinned(
+        spark, view, sf_dir,
         # repartition first: the single-file documents scan arrives as
         # 1–2 tasks and the per-doc Python work would run ~serial
         lambda: minhash128_sig_kernel(
             spark, spark.table("documents").repartition(
-                spark.sparkContext.defaultParallelism)),
+                spark.sparkContext.defaultParallelism)).localCheckpoint(),
+        view=view,
     )
+    return view
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1413,7 +1334,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mat_buckets(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the multi-table bucket assignment once (cached view) —
+    """Materialize the multi-table bucket assignment once (pinned view) —
     the bucket arithmetic would otherwise be inlined into every probe arm
     and join side.  sf-keyed like `_mat_sig`.
 
@@ -1429,19 +1350,19 @@ def _mat_buckets(spark: SparkSession, sf_dir: str) -> str:
     vector (7–9 s of the one-time build at sf1.0, fully charged by the
     driver's reduced-reps big-SF run); the kernel replays the identical
     weights and fold order (pytest-pinned row equality) in one
-    vectorized pass.  The SQL text stays the cache identity AND the
-    oracle's build recipe."""
-    from geostatssolvers_jl_spark.webtext.similarity import bucket_tables_sql
+    vectorized pass.  The SQL text (`similarity.bucket_tables_sql`)
+    stays the oracle's build recipe."""
     from geostatssolvers_jl_spark.webtext.vecops import bucket_tables_kernel
 
-    sql = ("kernel:" + bucket_tables_sql("spark")
-           + f"\n-- source: {sf_dir}")
-    return _materialize_any(
-        spark, sql, "bt_mat",
+    view = "bt_mat"
+    pinned(
+        spark, view, sf_dir,
         lambda: bucket_tables_kernel(
             spark, spark.table("embeddings")).repartition(
-            spark.sparkContext.defaultParallelism),
+            spark.sparkContext.defaultParallelism).localCheckpoint(),
+        view=view,
     )
+    return view
 
 
 # LSH candidate volume grows ~n²/2^planes: below this the whole plain
@@ -1495,10 +1416,12 @@ def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geostatssolvers_jl_spark.webtext.vecops import GATHER_SCORE_LIMIT
 
     _register(spark, sf_dir, ("embeddings",))
-    rk = _materialize_any(
-        spark, f"ivf_rk_kernel:nprobe=6:mod=51:{sf_dir}", "ivf_rk_mat",
+    rk = "ivf_rk_mat"
+    pinned(
+        spark, rk, sf_dir,
         lambda: ivf_ranked_spark(spark, "embeddings", nprobe=6,
-                                 pivot_mod=51),
+                                 pivot_mod=51).localCheckpoint(),
+        view=rk,
     )
     if spark.table("embeddings").count() > GATHER_SCORE_LIMIT:
         # beyond the broadcast bound: per-cell SQL join plan
@@ -1525,11 +1448,15 @@ def _mat_km_assign(spark: SparkSession, sf_dir: str) -> str:
         kmeans_assign_spark,
     )
 
-    return _materialize_any(
-        spark, f"km_assign_kernel:mod=31:{sf_dir}", "km_assign_mat",
+    view = "km_assign_mat"
+    pinned(
+        spark, view, sf_dir,
         lambda: kmeans_assign_spark(spark, "embeddings", pivot_mod=31)
-        .selectExpr("vec_id", "cid", "round(d2, 6) AS d2_r"),
+        .selectExpr("vec_id", "cid", "round(d2, 6) AS d2_r")
+        .localCheckpoint(),
+        view=view,
     )
+    return view
 
 
 def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2363,10 +2290,11 @@ def _mat_ik_ccdf(spark: SparkSession, sf_dir: str) -> str:
     the same ccdf relation (the `_mat_zonal_cells` recipe: solve once,
     aggregate many).  `q_indicator_kriging` itself stays a fresh
     solve.  sf-keyed like `_mat_sig`."""
-    return _materialize_any(
-        spark, f"ik_ccdf:{IK_THRESHOLDS}:{sf_dir}", "ik_ccdf_mat",
-        lambda: q_indicator_kriging(spark, sf_dir),
-    )
+    view = "ik_ccdf_mat"
+    pinned(spark, view, sf_dir,
+           lambda: q_indicator_kriging(spark, sf_dir).localCheckpoint(),
+           view=view)
+    return view
 
 
 def q_etype_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3072,17 +3000,16 @@ def q_lugs_aniso_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geostatssolvers_jl_spark.variogram import GaussianVariogram
 
     nx = 40
-    # one persisted incarnation per session (the invariant SQL scans the
-    # view 5x, and repeated gate runs must not stack InMemoryRelations)
-    sim = _materialize_df(spark, "lugs_aniso_sim", lambda: solve_lugs(
+    # one pinned incarnation per session (the invariant SQL scans the
+    # view 5x, and repeated gate runs must not stack checkpoints)
+    pinned(spark, "_lugs_aniso", f"nx={nx}:seed=7", lambda: solve_lugs(
         spark, CartesianGrid((nx, nx)), nreals=3,
         variables=[LUGSVariable(
             variogram=GaussianVariogram(range=1.0),
             metric=Anisotropic((20.0, 5.0)),
         )],
         seed=7,
-    ))
-    sim.createOrReplaceTempView("_lugs_aniso")
+    ).localCheckpoint(), view="_lugs_aniso")
     return spark.sql(f"""
         WITH cx AS (
           SELECT corr(a.z, b.z) AS c FROM _lugs_aniso a

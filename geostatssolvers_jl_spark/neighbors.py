@@ -268,36 +268,13 @@ def local_apply(
     bc = spark.sparkContext.broadcast(data)
 
     def run(batches: Iterable[pd.DataFrame]):
-        import os as _os
-        import time as _time
-
-        profile = _os.environ.get("SPARK_GRAFT_PROFILE") == "1"
         d = bc.value
-        t_search = t_kernel = t_arrow = 0.0
-        t_last = _time.time()
-        nrows = 0
         for pdf in batches:
-            t_arrow += _time.time() - t_last  # arrow deserialize + iterate
             if len(pdf) == 0:
-                t_last = _time.time()
                 continue
             q = pdf[query_coord_cols].to_numpy(np.float64)
-            t0 = _time.time()
             idx, dist, nvalid = search(d, q, k, metric, radius)
-            t_search += _time.time() - t0
-            t0 = _time.time()
-            out = kernel(pdf, d, idx, dist, nvalid)
-            t_kernel += _time.time() - t0
-            nrows += len(pdf)
-            t_last = _time.time()
-            yield out
-        if profile and nrows:
-            print(
-                f"[graft-profile] pid={_os.getpid()} rows={nrows} "
-                f"search={t_search:.2f}s kernel={t_kernel:.2f}s "
-                f"arrow_in={t_arrow:.2f}s",
-                flush=True,
-            )
+            yield kernel(pdf, d, idx, dist, nvalid)
 
     return queries.mapInPandas(run, schema=out_schema)
 

@@ -38,17 +38,11 @@ from pyspark.sql import functions as F
 
 from ..distances import Distance, Haversine
 from ..neighbors import knn_join_tiled_exact
+from ..session import pinned
 
 # kernel(q_pdf, qcoords (B,d), NC (B,k,d), vals {name: (B,k)},
 #        dist (B,k) +inf-padded, valid (B,k)) -> pd.DataFrame
 ArrayKernel = Callable[..., pd.DataFrame]
-
-# one live final-pairs cache per application (see tiled_local_apply);
-# entries are (owning SparkSession, pairs DataFrame, semanticHash) and
-# every get/evict/store runs under _PAIRS_LOCK — the gate executes arms
-# concurrently, so the sequence must be atomic
-_LAST_PAIRS: dict = {}
-_PAIRS_LOCK = __import__("threading").Lock()
 
 
 def tiled_local_apply(
@@ -111,51 +105,25 @@ def tiled_local_apply(
         first_replicate = (
             "queries" if qsel.count() <= dsel.count() else "data"
         )
-    pairs = knn_join_tiled_exact(
+    fresh = knn_join_tiled_exact(
         qsel, dsel, k, res, metric=metric, salt=salt,
         first_replicate=first_replicate,
     )
     # the ladder returns its final pairs CACHED (callers re-scan them in
-    # the attribute join + gather below); bound the pinned storage to ONE
-    # live pairs relation per session — repeated tiled solves otherwise
-    # accumulate a CacheManager entry each (the handle never reached the
-    # caller, so the documented caller-side unpersist was unreachable).
-    # cache() keeps lineage, so unpersisting the PREVIOUS solve's pairs
-    # stays correct even if its result is still lazily held — it would
-    # recompute, not fail.
-    # the gate runs arms concurrently, so the check/evict/store sequence
-    # must be atomic: interleaved threads could unpersist a pairs
-    # relation another in-flight solve depends on (correct via lineage
-    # but forces a full ladder re-execution) or overwrite an entry
-    # without unpersisting it (stranding a pinned InMemoryRelation —
-    # exactly the growth this cache bounds).  Keyed by the owning
-    # SparkSession too: applicationId is shared across sessions of one
-    # context, and a semanticHash hit must never hand back a DataFrame
-    # built in a different session.
-    sess = qsel.sparkSession
-    app = sess.sparkContext.applicationId
+    # the attribute join + gather below); `session.pinned` bounds that
+    # storage to ONE live pairs relation per application — repeated
+    # tiled solves otherwise accumulate a CacheManager entry each (the
+    # handle never reaches the caller).  cache() keeps lineage, so
+    # evicting the PREVIOUS solve's pairs stays correct even if its
+    # result is still lazily held — it recomputes, not fails.  An
+    # identical solve repeated in the same session (equal semanticHash)
+    # reuses the held pairs: evicting them would force a full ladder
+    # re-execution.
     try:
-        sem = pairs._jdf.queryExecution().analyzed().semanticHash()
+        sem = fresh._jdf.queryExecution().analyzed().semanticHash()
     except Exception:
         sem = None
-    with _PAIRS_LOCK:
-        prev = _LAST_PAIRS.get(app)
-        if prev is not None:
-            prev_sess, prev_df, prev_sem = prev
-            if (sem is not None and sem == prev_sem
-                    and prev_sess is sess):
-                # identical solve repeated (bench reps, retried stages):
-                # the CacheManager already holds these exact pairs —
-                # evicting them would force a full ladder re-execution
-                pairs = prev_df
-            else:
-                try:
-                    prev_df.unpersist()
-                except Exception:
-                    pass
-                _LAST_PAIRS[app] = (sess, pairs, sem)
-        else:
-            _LAST_PAIRS[app] = (sess, pairs, sem)
+    pairs = pinned(qsel.sparkSession, "tiled_pairs", sem, lambda: fresh)
     if radius is not None:
         # KBallSearch semantics: the ≤k nearest within the ball
         pairs = pairs.filter(F.col("dist") <= radius)

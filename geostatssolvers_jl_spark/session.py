@@ -3,14 +3,17 @@
 Arrow transfer on (all UDF stages are pandas/Arrow batched — no per-row
 Python anywhere, per the engine contract), AQE on (runtime re-planning +
 skew-join mitigation), modest shuffle partitions for local mode (overridden
-by cluster conf in production).
+by cluster conf in production).  Also home of `pinned`, the engine's one
+build-once/query-many memo for shared pinned relations.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # default shuffle parallelism = the session's core count, DERIVED from
 # the master string (r7): the old literal 32 merely coincided with the
@@ -52,6 +55,7 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             f"{pkg_parent}{os.pathsep}{pypath}" if pypath else pkg_parent
         )
+    local = master.startswith("local[")
     try:  # "local[32]" → 32; "local[*]" / cluster masters → os cpus
         ncores = int(master.split("[")[1].rstrip("]"))
     except (IndexError, ValueError):
@@ -68,14 +72,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")
-        # local-mode JVM = driver AND all executors: size the heap to the
-        # TASK count, not to a driver's usual footprint (guide §5).  8g
-        # across 32 concurrent tasks left ~150 MB of execution memory
-        # each — wide aggregations spilled every run.  ~0.75 GB/task,
-        # env-overridable; real clusters size spark.executor.memory
-        # instead and this conf reverts to a plain driver heap.
-        .config("spark.driver.memory", os.environ.get(
-            "SPARK_DRIVER_MEM", f"{max(8, (3 * ncores) // 4)}g"))
         # small single-file parquet inputs otherwise scan as 1-2 tasks
         # and every no-shuffle chain downstream (explode scoring, kernel
         # mapInPandas) inherits that width.  16m splits a ~100 MB input
@@ -87,6 +83,99 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
     )
+    # local-mode JVM = driver AND all executors: size the heap to the
+    # TASK count, not to a driver's usual footprint (guide §5).  8g
+    # across 32 concurrent tasks left ~150 MB of execution memory
+    # each — wide aggregations spilled every run.  ~0.75 GB/task,
+    # env-overridable.  Cluster masters size spark.executor.memory
+    # instead; their driver heap is the submit-time default unless
+    # SPARK_DRIVER_MEM says otherwise (the submit host's core count
+    # says nothing about the driver's needs).
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or (
+        f"{max(8, (3 * ncores) // 4)}g" if local else None)
+    if driver_mem:
+        builder = builder.config("spark.driver.memory", driver_mem)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# the single build-once/query-many memo: (applicationId, slot) →
+# (ident, pinned DataFrame, owning SparkSession, view name or None)
+_PINNED: dict = {}
+_PINNED_LOCK = threading.RLock()
+
+
+def pinned(spark: SparkSession, slot: str, ident,
+           build: Callable[[], DataFrame],
+           view: str | None = None) -> DataFrame:
+    """Keep ONE live pinned relation per ``(applicationId, slot)`` and
+    return it.
+
+    The live relation is reused only when ``ident`` equals the identity
+    it was built under (``None`` never matches: such a slot rebuilds on
+    every call) AND it was built by this very ``spark`` object — temp
+    views are session-scoped, so a hit recorded by session A must
+    rebuild for session B (B's catalog cannot resolve A's view).
+    Otherwise the old relation is released, its view is dropped when it
+    belongs to this session, entries of other (stopped) applications
+    are purged — a stopped context would otherwise stay pinned forever
+    — and ``build()`` runs; its result is registered as ``view`` when
+    one is given, stored and returned.
+
+    ``build`` returns the relation ALREADY pinned; the callers pin
+    differently on purpose:
+
+    * ``localCheckpoint()`` (eager): Spark's CacheManager fails to
+      substitute an InMemoryRelation into consumers that reference a
+      view from inside a WITH clause — ``SELECT ... FROM view`` plans an
+      InMemoryTableScan, but the same view inside a CTE-shaped consumer
+      RE-PLANS the view's full subtree, so a cached view silently
+      recomputes its upstream per query.  A checkpointed DataFrame is a
+      LogicalRDD leaf with no subtree to re-plan.  Releasing it frees
+      its blocks, so a result still built over an evicted checkpoint
+      fails instead of recomputing.
+    * ``cache()`` / ``persist()``: these keep lineage, so a result
+      still held over an evicted relation lazily recomputes instead.
+
+    The whole check → release → build → store sequence runs under one
+    lock: callers run concurrently, and an unsynchronized sequence
+    leaks an extra pinned relation per race or releases one an
+    in-flight caller depends on.  The lock is re-entrant, so a build
+    may itself use another slot."""
+    app = spark.sparkContext.applicationId
+    key = (app, slot)
+    with _PINNED_LOCK:
+        old = _PINNED.pop(key, None)
+        if old is not None:
+            old_ident, old_df, old_spark, old_view = old
+            if (ident is not None and ident == old_ident
+                    and old_spark is spark):
+                _PINNED[key] = old
+                return old_df
+            _release(old_df)
+            if old_view is not None and old_spark is spark:
+                try:
+                    spark.catalog.dropTempView(old_view)
+                except Exception:
+                    pass
+        for k in [k for k in _PINNED if k[0] != app]:
+            del _PINNED[k]
+        df = build()
+        if view is not None:
+            df.createOrReplaceTempView(view)
+        _PINNED[key] = (ident, df, spark, view)
+        return df
+
+
+def _release(df: DataFrame) -> None:
+    """Unpersist ``df`` — and, when it is a checkpoint, the checkpointed
+    RDD itself: ``DataFrame.unpersist`` only drops CacheManager entries,
+    which leaves a localCheckpoint's blocks pinned."""
+    try:
+        df.unpersist()
+        plan = df._jdf.queryExecution().logical()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+    except Exception:
+        pass

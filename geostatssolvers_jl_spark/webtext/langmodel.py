@@ -153,14 +153,13 @@ def _score_ctes(dialect: str, train_rel: str, score_rel: str,
         f"SELECT lang, tg, c FROM {cnt_rel}" if cnt_rel else
         pruned_count_sql(dialect, train_rel, vocab_topk)
     )
-    tgs_src = trigram_select(dialect, score_rel, "doc_id")
     if match_rel is not None:
         match_chain = f"""_match AS (
   SELECT doc_id, lang, msum FROM {match_rel}
 )"""
     else:
         match_chain = f"""_tgs AS (
-  {tgs_src}
+  {trigram_select(dialect, score_rel, "doc_id")}
 ), _madj AS (
   SELECT m.lang, m.tg, m.lp - f.lp0 AS dlp
   FROM _model m JOIN _floor f ON m.lang = f.lang
@@ -482,7 +481,14 @@ def match_scores_kernel(spark, score_df: DataFrame, madj_rows,
                 w = D[ix, j]
                 nz = w != 0
                 if nz.any():
-                    # float64 bincount is exact here: |msum| < 2^53
+                    # the float64 bincount below is exact only while
+                    # every partial sum stays below 2^53; the column's
+                    # absolute weight sum bounds them all
+                    if int(np.abs(w[nz]).sum()) >= 2**53:
+                        raise OverflowError(
+                            f"match_scores_kernel: |dlp| sum for "
+                            f"{langs[j]!r} reaches 2^53 in one batch; "
+                            "the float64 accumulation would be inexact")
                     acc[:, j] = np.bincount(
                         ds[nz], weights=w[nz].astype(np.float64),
                         minlength=n).astype(np.int64)

@@ -289,15 +289,6 @@ def _auto_planes(emb_df, n_planes: int | None) -> int:
 
 _AUTO_VIEW_SEQ = itertools.count()
 
-# one live auto-wrapper bucket persist per application: repeated
-# ann_topk/dedup_embedding calls otherwise accumulate a pinned
-# InMemoryRelation each (the handle never reached the caller), degrading
-# other caches under storage pressure.  Entries are (owning
-# SparkSession, persisted bucket DataFrame); atomic under the lock
-# because the gate runs arms concurrently.
-_LAST_BUCKETS: dict = {}
-_BUCKETS_LOCK = __import__("threading").Lock()
-
 
 def _prepare_auto(spark, emb_df, n_planes, n_tables, dim):
     """Shared wrapper plumbing: per-call UNIQUE view names (a fixed shared
@@ -325,50 +316,32 @@ def _prepare_auto(spark, emb_df, n_planes, n_tables, dim):
     emb_rel = f"_emb_auto_{seq}"
     bt_rel = f"_bt_auto_{seq}"
     emb_df.createOrReplaceTempView(emb_rel)
-    # evict the PREVIOUS call's persisted bucket table BEFORE persisting
-    # the new one: a repeated call over the same corpus yields the
-    # identical analyzed plan, CacheManager dedupes persist() by plan,
-    # and an unpersist-after would evict the shared entry and leave the
-    # new relation silently uncached.  (unpersist keeps lineage, so a
-    # caller still lazily holding the prior result recomputes, not
-    # fails.)  Bounds the wrapper to one live persist per application.
-    # the WHOLE evict → persist → store sequence runs under the lock
-    # (like the tiled pairs cache): releasing it between pop and store
-    # lets two concurrent arms both pop, both persist, and the second
-    # store strand the first persist — the exact leak this cache bounds.
-    # Cross-SESSION note: entries are keyed by applicationId (the cache
-    # manager is context-wide), so an eviction from a different session
-    # of the same context unpersists the data but cannot drop the other
-    # session's view — that leak is bounded by the number of sessions.
-    app = spark.sparkContext.applicationId
-    with _BUCKETS_LOCK:
-        prev = _LAST_BUCKETS.pop(app, None)
-        if prev is not None:
-            prev_spark, prev_bt, prev_view = prev
-            try:
-                prev_bt.unpersist()
-            except Exception:
-                pass
-            try:
-                if prev_spark is spark:
-                    spark.catalog.dropTempView(prev_view)
-            except Exception:
-                pass
-        # kernel build (r7 second session): same rows as
-        # `bucket_tables_sql` (pytest-pinned), one vectorized pass
-        # instead of n_tables × n_planes interpreted folds per vector.
-        # Repartition first — a single-file corpus scans as 1–2 tasks,
-        # which would serialize the kernel AND pin every downstream
-        # no-shuffle stage of the persisted relation to that width
-        # (the `_mat_buckets` lesson)
-        from .vecops import bucket_tables_kernel
+    # one live bucket persist per application (`session.pinned`, a slot
+    # that never reuses): repeated ann_topk/dedup_embedding calls would
+    # otherwise accumulate a pinned InMemoryRelation each (the handle
+    # never reaches the caller).  The helper evicts the PREVIOUS call's
+    # persist BEFORE this one persists: a repeated call over the same
+    # corpus yields the identical analyzed plan, CacheManager dedupes
+    # persist() by plan, and an unpersist-after would evict the shared
+    # entry and leave the new relation silently uncached.  (unpersist
+    # keeps lineage, so a caller still lazily holding the prior result
+    # recomputes, not fails.)  An eviction from a different session of
+    # the same context cannot drop the other session's view — that leak
+    # is bounded by the number of sessions.
+    #
+    # kernel build (r7 second session): same rows as `bucket_tables_sql`
+    # (pytest-pinned), one vectorized pass instead of n_tables × n_planes
+    # interpreted folds per vector.  Repartition first — a single-file
+    # corpus scans as 1–2 tasks, which would serialize the kernel AND pin
+    # every downstream no-shuffle stage of the persisted relation to
+    # that width (the `_mat_buckets` lesson)
+    from ..session import pinned
+    from .vecops import bucket_tables_kernel
 
-        bt = bucket_tables_kernel(
-            spark,
-            emb_df.repartition(spark.sparkContext.defaultParallelism),
-            p, n_tables, dim)
-        bt.persist().createOrReplaceTempView(bt_rel)
-        _LAST_BUCKETS[app] = (spark, bt, bt_rel)
+    pinned(spark, "auto_buckets", None, lambda: bucket_tables_kernel(
+        spark,
+        emb_df.repartition(spark.sparkContext.defaultParallelism),
+        p, n_tables, dim).persist(), view=bt_rel)
 
     def cleanup():
         spark.catalog.dropTempView(emb_rel)

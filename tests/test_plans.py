@@ -527,10 +527,10 @@ def test_zonal_join_untiled_query_over_tiled_edges_is_correct():
 
 
 def test_materialized_relations_rebuild_on_sf_switch(spark):
-    """Review follow-up (r6): _materialize caches by SQL text, and the
-    signature/bucket/raster/IVF relations read session views — a
-    same-session sf_dir switch must REBUILD them, not serve the
-    previous dataset's cache (the SQL now carries a source-dir key)."""
+    """Review follow-up (r6): the pinned signature/bucket/raster/IVF/
+    model relations read session views — a same-session sf_dir switch
+    must REBUILD them, not serve the previous dataset's relation (each
+    `_mat_*` pin takes the sf_dir as its identity)."""
     import __spark_entry__ as entry
 
     a = entry.q_dedup_minhash_lsh(spark, "/root/testdata/sf0.001").count()
@@ -540,3 +540,126 @@ def test_materialized_relations_rebuild_on_sf_switch(spark):
     za = entry.q_zonal_stats(spark, "/root/testdata/sf0.001").collect()
     zb = entry.q_zonal_stats(spark, "/root/testdata/sf0.01").collect()
     assert sorted(map(tuple, za)) != sorted(map(tuple, zb))
+    # the DataFrame-shaped pin (no view): the trained model follows the
+    # sf switch too, and switching back restores the first model
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    ma = rows(entry._mat_lm_model(spark, "/root/testdata/sf0.001"))
+    la = rows(entry.q_langid_model(spark, "/root/testdata/sf0.001"))
+    mb = rows(entry._mat_lm_model(spark, "/root/testdata/sf0.01"))
+    entry.q_langid_model(spark, "/root/testdata/sf0.01").count()
+    la2 = rows(entry.q_langid_model(spark, "/root/testdata/sf0.001"))
+    assert ma != mb and la == la2
+    assert rows(entry._mat_lm_model(spark, "/root/testdata/sf0.001")) == ma
+
+
+def test_pinned_storage_stays_one_per_slot(spark):
+    """`session.pinned` keeps ONE live relation per slot: a second round
+    of the same pinned operations — the auto-wrapper ANN buckets, a tiled
+    solve on a different grid, entry relations after an sf switch —
+    evicts every first-round relation instead of stacking another, so
+    the context's persistent-RDD count does not grow.  Checkpointed
+    entry relations count too: ``DataFrame.unpersist`` alone leaves a
+    localCheckpoint's blocks pinned.  A new session gets its own rebuilt
+    view that it can resolve."""
+    import numpy as np
+
+    import __spark_entry__ as entry
+    from geostatssolvers_jl_spark.distances import Haversine
+    from geostatssolvers_jl_spark.operators.kriging import (
+        KrigingModel, solve_kriging,
+    )
+    from geostatssolvers_jl_spark.variogram import GaussianVariogram
+    from geostatssolvers_jl_spark.webtext.similarity import ann_topk
+
+    jsc = spark.sparkContext._jsc
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    rng = np.random.default_rng(5)
+    data = spark.createDataFrame(
+        [(i, float(x), float(y), float(z)) for i, (x, y, z) in enumerate(
+            zip(rng.uniform(-40, 40, 200), rng.uniform(-30, 30, 200),
+                rng.normal(5, 2, 200)))],
+        "data_id long, lon double, lat double, z double",
+    )
+
+    def one_round(sf, grid_n):
+        ann_topk(spark, emb, k=3).collect()
+        grid = spark.createDataFrame(
+            [(i, float(x), float(y)) for i, (x, y) in enumerate(
+                zip(np.linspace(-35, 35, grid_n),
+                    np.linspace(-25, 25, grid_n)))],
+            "cell_id long, lon double, lat double",
+        )
+        solve_kriging(
+            data, grid, var="z",
+            model=KrigingModel(variogram=GaussianVariogram(range=2000.0)),
+            data_coord_cols=["lon", "lat"], query_coord_cols=["lon", "lat"],
+            maxneighbors=4, metric=Haversine(6371.0),
+            strategy="local-tiled", tile_res=3,
+        ).count()
+        entry._register(spark, sf, ("documents", "embeddings"))
+        entry._mat_sig(spark, sf)
+        entry._mat_buckets(spark, sf)
+        entry._mat_lm_model(spark, sf)
+        return jsc.getPersistentRDDs().size()
+
+    before = jsc.getPersistentRDDs().size()
+    first = one_round("/root/testdata/sf0.001", 30)
+    second = one_round("/root/testdata/sf0.01", 40)
+    third = one_round("/root/testdata/sf0.001", 50)
+    # five slots: buckets, tiled pairs, signature, bucket table, model
+    assert first - before <= 5
+    assert second == first and third == first
+
+    other = spark.newSession()
+    entry._register(other, "/root/testdata/sf0.001", ("documents",))
+    view = entry._mat_sig(other, "/root/testdata/sf0.001")
+    n_other = other.table(view).count()
+    assert n_other > 0
+    assert jsc.getPersistentRDDs().size() == first
+    # and the original session rebuilds for itself in turn
+    assert spark.table(entry._mat_sig(spark, "/root/testdata/sf0.001")
+                       ).count() == n_other
+
+
+def test_pinned_concurrent_callers_keep_one_relation(spark):
+    """Concurrent `session.pinned` callers on one slot, alternating its
+    identity so most calls evict: the check → release → build → store
+    sequence is atomic, so no racing build strands an extra checkpoint
+    and exactly one live relation remains."""
+    import sys
+    import threading
+
+    from geostatssolvers_jl_spark.session import pinned
+
+    jsc = spark.sparkContext._jsc
+    slot = "_stress_pinned"
+    pinned(spark, slot, -1, lambda: spark.range(8).localCheckpoint())
+    before = jsc.getPersistentRDDs().size()
+    errors = []
+
+    def worker(w):
+        try:
+            for i in range(4):
+                df = pinned(spark, slot, (w + i) % 2,
+                            lambda: spark.range(8).localCheckpoint())
+                assert df is not None
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(w,))
+                   for w in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=240)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert jsc.getPersistentRDDs().size() == before
+    live = pinned(spark, slot, 0, lambda: spark.range(8).localCheckpoint())
+    assert live.count() == 8 and jsc.getPersistentRDDs().size() == before

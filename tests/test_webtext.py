@@ -743,6 +743,22 @@ def test_langmodel_match_kernel_equals_inline_sql(spark):
     assert got == want and got
 
 
+def test_langmodel_match_kernel_refuses_inexact_sums(spark):
+    """The kernel sums ``dlp`` in float64; a batch whose absolute weight
+    sum reaches 2^53 would round, so it must fail instead of scoring."""
+    from pyspark.sql import Row
+
+    from geostatssolvers_jl_spark.webtext.langmodel import match_scores_kernel
+
+    df = spark.createDataFrame([(0, "abcabc")], "doc_id long, text string")
+    ok = [Row(lang="en", tg="abc", dlp=2**51)]
+    assert match_scores_kernel(spark, df, ok, ["en"]).collect() == [
+        (0, "en", 2**52)]
+    big = [Row(lang="en", tg="abc", dlp=2**52)]
+    with pytest.raises(Exception, match="2\\^53"):
+        match_scores_kernel(spark, df, big, ["en"]).collect()
+
+
 def test_langid_model_empty_training_corpus_raises(spark):
     """An all-sub-3-char training corpus cannot train a trigram model —
     the wrapper must refuse instead of silently emitting zero rows for
