@@ -735,18 +735,24 @@ def _fast_rank_tail(spark, cand, emb_rel: str, k: int, dim: int = DIM):
     `_score_distinct_pairs` for the scoring tiers and measurements);
     the pair stream (hundreds of millions of rows at sf1.0) never
     crosses an Exchange before the small post-prune rank exchange."""
-    scored = _score_distinct_pairs(spark, cand, emb_rel, dim,
-                                   gather=False)
-    seq = next(_AUTO_VIEW_SEQ)
-    rel = f"_ann_scored_{seq}"
-    scored.createOrReplaceTempView(rel)
-    return spark.sql(f"""
-SELECT qid, nid, cos_sim, rank FROM (
-  SELECT qid, nid, cos_sim,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY cos_sim DESC, nid) AS rank
-  FROM {rel} _i
-) _r WHERE rank <= {int(k)}""")
+    return _rank_topk(_score_distinct_pairs(spark, cand, emb_rel, dim,
+                                            gather=False), k)
+
+
+def _rank_topk(scored, k: int):
+    """The top-``k`` tail shared by the fast ANN tiers: per-query
+    ``row_number`` over ``(cos_sim DESC, nid)`` and a ``rank <= k``
+    filter — the SQL twins' order, and the shape Spark prunes with a
+    partial WindowGroupLimit before the one rank exchange.  DataFrame
+    API, so no temp view is registered per call."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(),
+                                          F.col("nid"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= int(k))
+            .select("qid", "nid", "cos_sim", "rank"))
 
 
 def ann_topk_lsh_spark(spark, k: int = 3, n_planes: int = 5,
@@ -797,16 +803,7 @@ def ann_topk_lsh_spark(spark, k: int = 3, n_planes: int = 5,
         "explode(array(named_struct('q', qid, 'n', nid), "
         "named_struct('q', nid, 'n', qid))) AS _s", "cos_sim"
     ).selectExpr("_s.q AS qid", "_s.n AS nid", "cos_sim")
-    seq = next(_AUTO_VIEW_SEQ)
-    rel = f"_ann_scored_{seq}"
-    both.createOrReplaceTempView(rel)
-    return spark.sql(f"""
-SELECT qid, nid, cos_sim, rank FROM (
-  SELECT qid, nid, cos_sim,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY cos_sim DESC, nid) AS rank
-  FROM {rel} _i
-) _r WHERE rank <= {int(k)}""")
+    return _rank_topk(both, k)
 
 
 def ann_topk_ivf_spark(spark, k: int = 3, nprobe: int = 4,

@@ -162,6 +162,30 @@ def test_ann_fast_paths_match_sql_twins(spark, emb_df):
     assert got == want and want
 
 
+def test_ann_fast_paths_register_no_views(spark, emb_df):
+    """The fast tiers' rank tail is DataFrame API: repeated calls leave
+    no per-call ``_ann_scored_*`` temp view behind in the catalog (one
+    per call used to accumulate, one per benchmark job)."""
+    from geostatssolvers_jl_spark.webtext.similarity import (
+        ann_topk_ivf_spark, ann_topk_lsh_spark, bucket_tables_sql,
+        ivf_ranked_spark,
+    )
+
+    emb_df.createOrReplaceTempView("_vo_emb4")
+    spark.sql(bucket_tables_sql(
+        "spark", "_vo_emb4", n_planes=3, n_tables=2, dim=8)
+    ).localCheckpoint().createOrReplaceTempView("_vo_bt4")
+    ivf_ranked_spark(spark, "_vo_emb4", nprobe=2, pivot_mod=7, dim=8
+                     ).localCheckpoint().createOrReplaceTempView("_vo_rk4")
+    for _ in range(2):
+        ann_topk_lsh_spark(spark, k=2, n_planes=3, bt_rel="_vo_bt4",
+                           emb_rel="_vo_emb4", dim=8).collect()
+    ann_topk_ivf_spark(spark, k=2, nprobe=2, rk_rel="_vo_rk4",
+                       emb_rel="_vo_emb4", dim=8).collect()
+    views = [t.name for t in spark.catalog.listTables()]
+    assert not [v for v in views if v.startswith("_ann_scored_")], views
+
+
 def test_bucket_tables_kernel_matches_sql(spark, emb_df):
     """The kernel bucket assignment must equal `bucket_tables_sql`'s
     rows exactly — same weights, same fold order, same sign test

@@ -1480,6 +1480,24 @@ def test_curation_funnel_consistency(spark):
         spark.catalog.dropTempView("cur_docs")
 
 
+def test_curation_oracles_sum_as_bigint():
+    """The curation oracle texts' integer sums are BIGINT on DuckDB (its
+    integer sum defaults to HUGEINT, which hashes differently from
+    Spark's bigint sums)."""
+    import __spark_entry__ as entry
+
+    oracles = entry.oracle_sql()
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                "'/root/testdata/sf0.001/documents.parquet'")
+    for name in ("corpus_curation", "curation_funnel"):
+        types = {r[0]: r[1] for r in con.execute(
+            f"DESCRIBE {oracles[name]}").fetchall()}
+        assert "HUGEINT" not in types.values(), (name, types)
+        assert types["total_tokens" if name == "corpus_curation"
+                     else "curated_tokens"] == "BIGINT"
+
+
 def test_curation_dedup_drops_exact_copies(spark):
     """Planted exact duplicates must collapse to one survivor (and the
     quality gate must keep the long fluent text used here)."""

@@ -2,13 +2,16 @@
 
 Runs every ``__spark_entry__.queries()`` entry on Spark and, where an
 ``oracle_sql()`` entry exists, the oracle on DuckDB over the same parquet
-tables; compares row count, column names, and order-insensitive values.
+tables; compares row count, column names, integer column widths, and
+order-insensitive values.  The Spark master is ``local[N]`` with N from
+``SPARK_GRAFT_CPUS``, else the machine's core count.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from pathlib import Path
@@ -26,14 +29,42 @@ TABLES = (
 ).split()
 
 
+# integer widths in bits.  Values alone cannot see a HUGEINT sum: it
+# compares equal to Spark's bigint as a Python int, but leaves DuckDB as
+# a pandas float64 and is hash-red at the driver.  Integers up to 64 bits
+# on both sides are the known-benign pairs (CORRECTNESS_r07: a Spark int
+# row_number vs DuckDB's BIGINT one is hash-green), so only a wider
+# DuckDB integer, or an integer on one side only, fails.
+DUCK_INT_BITS = {
+    "TINYINT": 8, "SMALLINT": 16, "INTEGER": 32, "BIGINT": 64,
+    "HUGEINT": 128, "UTINYINT": 8, "USMALLINT": 16, "UINTEGER": 32,
+    "UBIGINT": 64, "UHUGEINT": 128,
+}
+SPARK_INT_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
+
+
 def norm(v):
     if isinstance(v, float):
         return round(v, 9)
     return v
 
 
+def int_width_drift(schema, described) -> list[str]:
+    """Columns of a Spark ``schema`` and DuckDB ``DESCRIBE`` rows whose
+    integer types would hash apart: an integer on one side only, or a
+    DuckDB integer wider than Spark's 64 bits."""
+    out = []
+    for field, row in zip(schema.fields, described):
+        spark_t, duck_t = field.dataType.simpleString(), row[1]
+        sb, db = SPARK_INT_BITS.get(spark_t), DUCK_INT_BITS.get(duck_t)
+        if (sb or db) and not (sb and db and db <= 64):
+            out.append(f"{field.name}: {spark_t} != {duck_t}")
+    return out
+
+
 def run(sf_dir: str, only: list[str]) -> int:
-    spark = get_spark("check-oracle", master="local[8]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+    spark = get_spark("check-oracle", master=f"local[{cpus}]")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -57,6 +88,7 @@ def run(sf_dir: str, only: list[str]) -> int:
         try:
             df = fn(spark, sf_dir)
             cols = df.columns
+            schema = df.schema
             srows = [tuple(norm(v) for v in r) for r in df.collect()]
         except Exception as e:
             print(f"FAIL  {name}: spark error: {type(e).__name__}: {e}")
@@ -70,6 +102,7 @@ def run(sf_dir: str, only: list[str]) -> int:
                 failures += 1
             continue
         try:
+            described = con.execute(f"DESCRIBE {oracles[name]}").fetchall()
             res = con.execute(oracles[name])
             dcols = [d[0] for d in res.description]
             drows = [tuple(norm(v) for v in r) for r in res.fetchall()]
@@ -80,6 +113,10 @@ def run(sf_dir: str, only: list[str]) -> int:
         ok = True
         if cols != dcols:
             print(f"FAIL  {name}: columns {cols} != {dcols}")
+            ok = False
+        drift = int_width_drift(schema, described)
+        if drift:
+            print(f"FAIL  {name}: integer widths {drift}")
             ok = False
         if len(srows) != len(drows):
             print(f"FAIL  {name}: rowcount {len(srows)} != {len(drows)}")
