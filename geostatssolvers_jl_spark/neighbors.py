@@ -11,20 +11,26 @@ Spark's own broadcast-vs-shuffle join choice:
 * **broadcast path** (`local_apply`): the conditioning data (after the
   non-missing filter) is collected once, broadcast to executors, and a
   single ``mapInPandas`` pass over the *query* side (the huge side: grid
-  cells / pages) does vectorized top-k search **and** the downstream math
-  kernel in one Arrow batch — zero shuffles end-to-end.  This is exactly
-  the reference's "build kd-tree once, stream queries" design, distributed
-  over query partitions.  Valid while the data side fits an executor
-  (~10⁶ points); the reference's own solvers share this assumption (its
-  kd-tree is a single in-memory structure).
+  cells / pages) does vectorized top-k search, gathers the neighbours
+  **and** runs the estimator kernel in one Arrow batch — zero shuffles
+  end-to-end.  This is exactly the reference's "build kd-tree once,
+  stream queries" design, distributed over query partitions.  Valid while
+  the data side fits an executor (~10⁶ points); the reference's own
+  solvers share this assumption (its kd-tree is a single in-memory
+  structure).
 
-* **tiled path** (`knn_join_tiled`): big-big case (10¹²-page story).  Both
-  sides get H3-style cell ids; data is replicated into the ring-1 halo of
-  its cell; an equi-join on cell id (ordinary shuffle join Catalyst/AQE can
-  optimize, incl. skew splitting) produces candidates; a window top-k per
-  query with a *certification radius* keeps only provably-exact neighbors;
-  unresolved queries (kth neighbor not certified) escalate to a coarser
-  resolution and finally to the broadcast path.
+* **tiled path** (`knn_join_tiled_exact`): big-big case (10¹²-page
+  story).  Both sides get H3-style cell ids; data is replicated into the
+  ring-1 halo of its cell; an equi-join on cell id (ordinary shuffle join
+  Catalyst/AQE can optimize, incl. skew splitting) produces candidates; a
+  window top-k per query with a *certification radius* keeps only
+  provably-exact neighbors; unresolved queries (kth neighbor not
+  certified) escalate to wider rings and finally to a bounded exact
+  terminal pass.  `operators.tiled` gathers the pairs per query.
+
+Both strategies gather into the same padded neighbour stacks and call
+the same estimator kernel, one per operator, under the `Kernel` contract
+below — their results agree by construction.
 
 Top-k is deterministic: ties broken by data row id ascending.
 """
@@ -244,9 +250,33 @@ def topk_search(
 # ------------------------------------------------- broadcast mapInPandas
 
 
-Kernel = Callable[
-    [pd.DataFrame, PointData, np.ndarray, np.ndarray, np.ndarray], pd.DataFrame
-]
+# The one local-estimator contract, called by both search strategies
+# (`local_apply` here, `operators.tiled.tiled_local_apply`):
+#   kernel(q_pdf, qcoords (B,d), NC (B,k,d), vals {name: (B,k)},
+#          dist (B,k), valid (B,k)) -> pd.DataFrame
+# Each query's neighbours fill its leading slots in (dist, data id) order;
+# the slots after them hold NC = vals = 0, dist = +inf, valid = False.
+Kernel = Callable[..., pd.DataFrame]
+
+
+def _map_broadcast(
+    queries: DataFrame,
+    data: PointData,
+    query_coord_cols: list[str],
+    fn: Callable[[pd.DataFrame, PointData, np.ndarray], pd.DataFrame],
+    out_schema: str,
+) -> DataFrame:
+    """``fn(q_pdf, data, qcoords)`` over every non-empty Arrow batch of
+    ``queries``, with ``data`` broadcast once to the executors."""
+    bc = queries.sparkSession.sparkContext.broadcast(data)
+
+    def run(batches: Iterable[pd.DataFrame]):
+        d = bc.value
+        for pdf in batches:
+            if len(pdf) > 0:
+                yield fn(pdf, d, pdf[query_coord_cols].to_numpy(np.float64))
+
+    return queries.mapInPandas(run, schema=out_schema)
 
 
 def local_apply(
@@ -259,24 +289,23 @@ def local_apply(
     out_schema: str,
     radius: float | None = None,
 ) -> DataFrame:
-    """One-pass search+solve over query partitions (zero shuffle).
+    """One-pass search + gather + ``kernel`` (the `Kernel` contract) over
+    query partitions, every value column of ``data`` gathered as float64
+    (zero shuffle)."""
 
-    ``kernel(q_pdf, data, idx, dist, nvalid) -> pd.DataFrame`` runs fully
-    vectorized per Arrow batch.
-    """
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast(data)
+    def fn(pdf, d, q):
+        idx, dist, _ = search(d, q, k, metric, radius)
+        valid = idx >= 0
+        safe = np.where(valid, idx, 0)
+        NC = d.coords[safe]
+        NC[~valid] = 0.0
+        vals = {}
+        for name, v in d.values.items():
+            vals[name] = v[safe].astype(np.float64, copy=False)
+            vals[name][~valid] = 0.0
+        return kernel(pdf, q, NC, vals, dist, valid)
 
-    def run(batches: Iterable[pd.DataFrame]):
-        d = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            q = pdf[query_coord_cols].to_numpy(np.float64)
-            idx, dist, nvalid = search(d, q, k, metric, radius)
-            yield kernel(pdf, d, idx, dist, nvalid)
-
-    return queries.mapInPandas(run, schema=out_schema)
+    return _map_broadcast(queries, data, query_coord_cols, fn, out_schema)
 
 
 def knn_pairs(
@@ -291,7 +320,8 @@ def knn_pairs(
     """(query_id, data_id, dist, rank) pairs — the raw kNN join output the
     north rule's 'identical join output rows' check applies to."""
 
-    def kernel(pdf, d, idx, dist, nvalid):
+    def fn(pdf, d, q):
+        idx, dist, _ = search(d, q, k, metric, radius)
         n, kk = idx.shape
         rows = np.repeat(pdf[id_col].to_numpy(np.int64), kk)
         flat_idx = idx.ravel()
@@ -305,10 +335,9 @@ def knn_pairs(
             }
         )
 
-    return local_apply(
-        queries, data, query_coord_cols, k, metric, kernel,
+    return _map_broadcast(
+        queries, data, query_coord_cols, fn,
         out_schema=f"{id_col} long, data_id long, dist double, rank int",
-        radius=radius,
     )
 
 

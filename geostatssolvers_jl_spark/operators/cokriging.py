@@ -42,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..distances import Distance, Euclidean
-from ..neighbors import PointData, collect_points
+from ..neighbors import PointData, collect_points, local_apply
 from ..variogram import Variogram
 from .kriging import _pairwise_cov
 
@@ -283,16 +283,15 @@ def solve_cokriging_collocated(
     known at every estimation location, e.g. another solution raster
     or a document-statistics surface) — so the local system only grows
     by ONE row over ordinary local kriging and the physical plan is the
-    unchanged zero-shuffle broadcast kernel (kNN search + stacked
-    batched solves per Arrow batch).  This is the co-kriging tier that
+    unchanged zero-shuffle broadcast pass (kNN search + stacked
+    batched solves per Arrow batch, its kernel under the
+    `neighbors.Kernel` contract).  This is the co-kriging tier that
     scales to corpus-sized grids; `solve_cokriging` (full block system)
     is the small-calibration-set exact tier.
 
     Exactness: a query AT a primary datum returns that datum exactly
     (λ = eᵢ, λ₂ = 0 satisfies the MM1 system regardless of the
     collocated secondary's value there)."""
-    from ..neighbors import local_apply
-
     data_coord_cols = data_coord_cols or ["x", "y"]
     query_coord_cols = query_coord_cols or ["cx", "cy"]
     model.validate()
@@ -309,21 +308,16 @@ def solve_cokriging_collocated(
         raise ValueError("invalid min/max number of neighbors")
     schema = f"{id_col} long, {var} double, {var}_variance double"
 
-    def kernel(pdf, d, idx, dist, nvalid):
-        q = pdf[query_coord_cols].to_numpy(np.float64)
+    def kernel(pdf, qcoords, NC, vals, dist, valid):
         y2col = pdf[secondary_col]
         if y2col.isna().any():
             raise ValueError(
                 f"solve_cokriging_collocated: NULL {secondary_col} at "
                 f"estimation locations — the collocated secondary must "
                 f"be exhaustive (fail-loud contract)")
-        y2 = y2col.to_numpy(np.float64)
-        z_all = d.values[var].astype(np.float64)
-        safe_idx = np.maximum(idx, 0)
-        NC = d.coords[safe_idx]
-        zn = z_all[safe_idx]
         mu, v = _solve_collocated_batch(
-            model, q, NC, zn, idx >= 0, dist, y2, metric, minneighbors)
+            model, qcoords, NC, vals[var], valid, dist,
+            y2col.to_numpy(np.float64), metric, minneighbors)
         return pd.DataFrame({
             id_col: pdf[id_col].to_numpy(np.int64),
             var: mu, f"{var}_variance": v,

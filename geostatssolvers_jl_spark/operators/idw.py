@@ -11,11 +11,14 @@ Semantics reproduced exactly:
 * outputs ``var`` (weighted mean) and ``var_distance`` (min distance,
   ``idw.jl:137``).
 
-Two physical strategies:
+Two forms of the same estimator:
 * `idw_agg_sql` — fully declarative join+groupBy aggregation (zero UDF;
   whole-stage codegen; the same SQL text runs on DuckDB for the oracle);
-* `solve_idw` — the zero-shuffle broadcast kernel (`local_apply`): search
-  and weighted mean fused in one vectorized mapInPandas pass.
+* `idw_kernel` — the vectorized weighted mean over padded neighbour
+  stacks (the `neighbors.Kernel` contract).  `solve_idw` calls it from
+  either neighbour search: the zero-shuffle broadcast pass
+  (`neighbors.local_apply`) or the tiled join (`tiled.tiled_local_apply`).
+  `idw_compositional_kernel` is the same for composition-valued data.
 """
 
 from __future__ import annotations
@@ -27,6 +30,8 @@ from pyspark.sql import DataFrame
 from ..distances import Distance, Euclidean
 from ..grid import CartesianGrid
 from ..neighbors import PointData, collect_points, local_apply
+from ..planner import routes_tiled
+from . import tiled
 
 
 def idw_agg_sql(pairs: str, var: str = "z", exponent: float = 1.0,
@@ -67,13 +72,13 @@ def idw_agg_sql(pairs: str, var: str = "z", exponent: float = 1.0,
 
 def idw_kernel(var: str, exponent: float, minneighbors: int,
                id_col: str = "cell_id"):
-    """Vectorized IDW over stacked neighbor arrays (one Arrow batch)."""
+    """The local IDW estimator under the `neighbors.Kernel` contract,
+    called by both neighbour strategies."""
 
-    def kernel(pdf: pd.DataFrame, d: PointData, idx: np.ndarray,
-               dist: np.ndarray, nvalid: np.ndarray) -> pd.DataFrame:
-        z = d.values[var].astype(np.float64)
-        zn = z[np.maximum(idx, 0)]  # (n, k); invalid slots masked below
-        valid = idx >= 0
+    def kernel(pdf: pd.DataFrame, qcoords: np.ndarray, NC: np.ndarray,
+               vals: dict[str, np.ndarray], dist: np.ndarray,
+               valid: np.ndarray) -> pd.DataFrame:
+        zn = vals[var]
         with np.errstate(divide="ignore", invalid="ignore"):
             w = np.where(valid, 1.0 / np.power(dist, exponent), 0.0)
         sw = w.sum(axis=1)
@@ -86,7 +91,7 @@ def idw_kernel(var: str, exponent: float, minneighbors: int,
         mu = np.where(zero, zn[:, 0], mu)
         sigma = np.where(zero, 0.0, dmin)
         # infinite weight sum w/o exact zero cannot happen (d>0 ⇒ finite w)
-        few = nvalid < minneighbors
+        few = valid.sum(axis=1) < minneighbors
         mu = np.where(few, np.nan, mu)
         sigma = np.where(few, np.nan, sigma)
         return pd.DataFrame({
@@ -142,6 +147,73 @@ def aitchison(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return np.sqrt(((ilr(a) - ilr(b)) ** 2).sum(axis=-1))
 
 
+def expand_composition(data: DataFrame, var: str,
+                       data_coord_cols: list[str]
+                       ) -> tuple[DataFrame, list[str], list[str]]:
+    """The non-null rows of composition column ``var`` as (D−1) ilr
+    coordinate columns and D part columns — the one expansion both
+    neighbour strategies gather.  Returns (frame, ilr cols, part cols);
+    the frame keeps ``data_id`` when ``data`` has it."""
+    data = data.filter(f"{var} IS NOT NULL")
+    # D from one data row — a bounded driver action (first row only)
+    first = data.select(var).first()
+    if first is None:
+        raise ValueError("estimation requires data")
+    D = len(first[0])
+    ycols = [f"_y{j}" for j in range(D - 1)]
+    ccols = [f"_c{j}" for j in range(D)]
+    ids = ["data_id"] if "data_id" in data.columns else []
+    keep = ids + data_coord_cols
+
+    def expand(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            comp = np.stack(pdf[var].to_numpy())
+            Y = ilr(comp)
+            out = pdf[keep].copy()
+            for j in range(D - 1):
+                out[ycols[j]] = Y[:, j]
+            for j in range(D):
+                out[ccols[j]] = comp[:, j]
+            yield out
+
+    schema = ", ".join(
+        [f"{c} long" for c in ids]
+        + [f"{c} double" for c in data_coord_cols + ycols + ccols]
+    )
+    return data.select(*keep, var).mapInPandas(expand, schema), ycols, ccols
+
+
+def idw_compositional_kernel(var: str, ycols: list[str], ccols: list[str],
+                             exponent: float, minneighbors: int,
+                             id_col: str = "cell_id"):
+    """The local compositional IDW estimator under the `neighbors.Kernel`
+    contract, over the columns of `expand_composition`: weighted mean in
+    ilr space, `ilr_inv`, zero-distance closure override."""
+
+    def kernel(pdf, qcoords, NC, vals, dist, valid):
+        Yd = np.stack([vals[c] for c in ycols], axis=-1)
+        Cd = np.stack([vals[c] for c in ccols], axis=-1)
+        with np.errstate(divide="ignore"):
+            w = np.where(valid, 1.0 / np.power(dist, exponent), 0.0)
+        finite_w = np.where(np.isfinite(w), w, 0.0)
+        sw = finite_w.sum(axis=1, keepdims=True)
+        sw = np.where(sw > 0, sw, 1.0)
+        ym = np.einsum("nk,nkd->nd", finite_w / sw, Yd)
+        out = ilr_inv(ym)
+        zero = (dist[:, 0] == 0.0) & valid[:, 0]
+        out[zero] = closure(Cd[:, 0][zero])
+        few = valid.sum(axis=1) < minneighbors
+        rows = [None if f else row.tolist() for f, row in zip(few, out)]
+        return pd.DataFrame({
+            id_col: pdf[id_col].to_numpy(np.int64),
+            var: rows,
+        })
+
+    return kernel
+
+
 def solve_idw_compositional(
     data: DataFrame,
     grid_df: DataFrame,
@@ -164,79 +236,33 @@ def solve_idw_compositional(
     re-closed compositions as an array column.
 
     ``strategy`` as in `solve_idw`: 'auto' routes a data side above
-    ``broadcast_limit`` rows through the distributed tiled join
-    (`tiled.idw_compositional_tiled`, bit-identical results) instead of a
-    driver collect."""
+    ``broadcast_limit`` rows through the distributed tiled join instead
+    of a driver collect; both routes gather `expand_composition`'s
+    columns into `idw_compositional_kernel`."""
     data_coord_cols = data_coord_cols or ["x", "y"]
     query_coord_cols = query_coord_cols or ["cx", "cy"]
-    # shared by BOTH strategies (the broadcast path must reject the same
-    # inputs the tiled path does — idw.jl:95)
-    if minneighbors < 1:
-        raise ValueError("minneighbors must be >= 1")
-    if maxneighbors is not None and minneighbors > maxneighbors:
-        raise ValueError("invalid min/max number of neighbors")
-    if maxneighbors is not None:
-        from ..planner import choose_strategy, choose_tile_res
-
-        if strategy == "auto":
-            n_data = data.count()
-            strategy = choose_strategy(n_data, maxneighbors, broadcast_limit)
-            if tile_res is None:
-                tile_res = choose_tile_res(n_data)
-        if strategy == "local-tiled":
-            from .tiled import idw_compositional_tiled
-
-            return idw_compositional_tiled(
-                data, grid_df, var, data_coord_cols, query_coord_cols,
-                maxneighbors, minneighbors, exponent, metric, id_col,
-                res=(tile_res if tile_res is not None else 6),
-                first_replicate=tiled_first_replicate,
-            )
+    tiled_route = routes_tiled(data, maxneighbors, minneighbors, strategy,
+                               broadcast_limit)
+    expanded, ycols, ccols = expand_composition(data, var, data_coord_cols)
+    kernel = idw_compositional_kernel(var, ycols, ccols, exponent,
+                                      minneighbors, id_col)
+    schema = f"{id_col} long, {var} array<double>"
+    if tiled_route:
+        return tiled.tiled_local_apply(
+            grid_df, expanded, query_coord_cols, data_coord_cols,
+            ycols + ccols, maxneighbors, kernel, schema, metric=metric,
+            res=tile_res, id_col=id_col,
+            first_replicate=tiled_first_replicate,
+        )
     # collect_points gives the canonical id-sorted order, so kNN ties
     # break deterministically AND identically to the tiled path's
     # (dist, data_id) window ordering
-    d0 = collect_points(
-        data.filter(f"{var} IS NOT NULL"), data_coord_cols, [var],
+    d = collect_points(
+        expanded, data_coord_cols, ycols + ccols,
         id_col="data_id" if "data_id" in data.columns else None,
     )
-    if d0.n == 0:
-        raise ValueError("estimation requires data")
-    comp = np.stack(d0.values[var])
-    Y = ilr(comp)
-    d = PointData(
-        coords=d0.coords,
-        values={"_ilr": Y, var: comp},
-        ids=d0.ids,
-    )
     k = d.n if maxneighbors is None else min(maxneighbors, d.n)
-
-    def kernel(qpdf, dd, idx, dist, nvalid):
-        Yd = dd.values["_ilr"]
-        Cd = dd.values[var]
-        valid = idx >= 0
-        safe = np.maximum(idx, 0)
-        with np.errstate(divide="ignore"):
-            w = np.where(valid, 1.0 / np.power(dist, exponent), 0.0)
-        finite_w = np.where(np.isfinite(w), w, 0.0)
-        sw = finite_w.sum(axis=1, keepdims=True)
-        sw = np.where(sw > 0, sw, 1.0)
-        ym = np.einsum("nk,nkd->nd", finite_w / sw, Yd[safe])
-        out = ilr_inv(ym)
-        zero = (dist[:, 0] == 0.0) & valid[:, 0]
-        out[zero] = closure(Cd[safe[:, 0][zero]])
-        few = nvalid < minneighbors
-        vals = [None if f else row.tolist() for f, row in zip(few, out)]
-        return pd.DataFrame({
-            id_col: qpdf[id_col].to_numpy(np.int64),
-            var: vals,
-        })
-
-    from ..neighbors import local_apply
-
-    schema = f"{id_col} long, {var} array<double>"
-    return local_apply(
-        grid_df, d, query_coord_cols, k, metric, kernel, schema
-    )
+    return local_apply(grid_df, d, query_coord_cols, k, metric, kernel, schema)
 
 
 def solve_idw(
@@ -263,29 +289,18 @@ def solve_idw(
     above ``broadcast_limit`` through the distributed tiled join."""
     data_coord_cols = data_coord_cols or ["x", "y"]
     query_coord_cols = query_coord_cols or ["cx", "cy"]
-    if minneighbors < 1:
-        raise ValueError("minneighbors must be >= 1")
     if exponent <= 0:
         raise ValueError("exponent must be positive")  # idw.jl:94
-    if isinstance(data, DataFrame) and maxneighbors is not None:
-        from ..planner import choose_strategy, choose_tile_res
-
-        if strategy == "auto":
-            n_data = data.count()
-            strategy = choose_strategy(n_data, maxneighbors, broadcast_limit)
-            if tile_res is None:
-                tile_res = choose_tile_res(n_data)
-        if strategy == "local-tiled":
-            from .tiled import idw_tiled
-
-            if minneighbors > maxneighbors:
-                raise ValueError("invalid min/max number of neighbors")
-            return idw_tiled(
-                data, grid_df, var, data_coord_cols, query_coord_cols,
-                maxneighbors, minneighbors, exponent, metric, radius,
-                id_col, res=(tile_res if tile_res is not None else 6),
-                first_replicate=tiled_first_replicate,
-            )
+    kernel = idw_kernel(var, exponent, minneighbors, id_col)
+    schema = f"{id_col} long, {var} double, {var}_distance double"
+    if routes_tiled(data, maxneighbors, minneighbors, strategy,
+                    broadcast_limit):
+        return tiled.tiled_local_apply(
+            grid_df, data.filter(f"{var} IS NOT NULL"), query_coord_cols,
+            data_coord_cols, [var], maxneighbors, kernel, schema,
+            metric=metric, radius=radius, res=tile_res, id_col=id_col,
+            first_replicate=tiled_first_replicate,
+        )
     if isinstance(data, DataFrame):
         data = collect_points(
             data.filter(f"{var} IS NOT NULL"),
@@ -298,8 +313,6 @@ def solve_idw(
     k = data.n if maxneighbors is None else min(maxneighbors, data.n)
     if minneighbors > k:
         raise ValueError("invalid min/max number of neighbors")  # idw.jl:95
-    kernel = idw_kernel(var, exponent, minneighbors, id_col)
-    schema = f"{id_col} long, {var} double, {var}_distance double"
     return local_apply(
         grid_df, data, query_coord_cols, k, metric, kernel, schema, radius
     )

@@ -14,7 +14,9 @@ Two physical strategies behind one API, mirroring the reference's
 * **local**: per grid cell, top-k neighbor search feeds stacked
   (k+m)×(k+m) covariance systems solved with one batched
   ``np.linalg.solve`` per Arrow batch (the north rule's "stacked
-  covariance matrices, no per-row Python").
+  covariance matrices, no per-row Python").  `kriging_kernel` is the one
+  local estimator; the broadcast (`neighbors.local_apply`) and tiled
+  (`tiled.kriging_tiled`) neighbour searches both call it.
 
 Math (public Matheron/GSLIB forms, covariance form C(h) = sill − γ(h)):
   SK: C λ = c₀;               μ̂ = m + λᵀ(z−m);  σ² = C(0) − λᵀc₀
@@ -35,8 +37,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..distances import Distance, Euclidean
-from ..neighbors import PointData, collect_points, local_apply, topk_search
+from ..neighbors import PointData, collect_points, local_apply
+from ..planner import routes_tiled
 from ..variogram import GaussianVariogram, Variogram
+from . import tiled
 
 
 # ------------------------------------------------------------- estimators
@@ -174,28 +178,6 @@ def _predict_global(model: KrigingModel, fit: dict, qcoords: np.ndarray,
 # ------------------------------------------------------------- local path
 
 
-def _solve_local_batch(
-    model: KrigingModel,
-    d: PointData,
-    var: str,
-    qcoords: np.ndarray,
-    idx: np.ndarray,
-    dist: np.ndarray,
-    metric: Distance,
-    minneighbors: int,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Gather neighbor arrays from the broadcast PointData, then run the
-    shared stacked solve (`solve_systems`)."""
-    z_all = d.values[var].astype(np.float64)
-    safe_idx = np.maximum(idx, 0)
-    NC = d.coords[safe_idx]          # (B, k, dim)
-    zn = z_all[safe_idx]             # (B, k)
-    valid = idx >= 0                 # (B, k)
-    return solve_systems(
-        model, qcoords, NC, zn, valid, dist, metric, minneighbors
-    )
-
-
 def solve_systems(
     model: KrigingModel,
     qcoords: np.ndarray,
@@ -208,8 +190,7 @@ def solve_systems(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Stacked per-location Kriging systems over GATHERED neighbor arrays
     (NC (B,k,dim), zn (B,k), valid (B,k), dist (B,k) with +inf in invalid
-    slots), one batched solve — shared by the broadcast kernel and the
-    tiled big-big path (identical FP op order ⇒ identical results).
+    slots), one batched solve.
 
     Arrow batches can be 16k+ rows; the stacked (B, k, k) intermediates at
     that size churn ~100 MB of temporaries per batch and stop scaling
@@ -294,6 +275,23 @@ def solve_systems(
     return mu, var_
 
 
+def kriging_kernel(model: KrigingModel, var: str, metric: Distance,
+                   minneighbors: int, id_col: str = "cell_id"):
+    """The local kriging estimator under the `neighbors.Kernel` contract,
+    called by both neighbour strategies."""
+
+    def kernel(pdf, qcoords, NC, vals, dist, valid):
+        mu, v = solve_systems(
+            model, qcoords, NC, vals[var], valid, dist, metric, minneighbors
+        )
+        return pd.DataFrame({
+            id_col: pdf[id_col].to_numpy(np.int64),
+            var: mu, f"{var}_variance": v,
+        })
+
+    return kernel
+
+
 # ---------------------------------------------------------------- solver
 
 
@@ -319,36 +317,27 @@ def solve_kriging(
     ``maxneighbors=None`` → global strategy; else local (krig.jl:151-157).
     ``radius`` realizes the MetricBall neighborhood (KBallSearch).
 
-    ``strategy``: 'auto' consults `planner.choose_strategy` — a DataFrame
+    ``strategy``: 'auto' consults `planner.routes_tiled` — a DataFrame
     data side above ``broadcast_limit`` rows routes through the fully
-    distributed tiled join (`operators.tiled.kriging_tiled`, results
-    bit-identical to the broadcast kernel) instead of dying in a driver
-    collect; 'local-broadcast' / 'local-tiled' force a physical path.
+    distributed tiled join (`operators.tiled.kriging_tiled`, the same
+    `kriging_kernel`) instead of dying in a driver collect;
+    'local-broadcast' / 'local-tiled' force a physical path.
+    ``tile_res``: the tiled route's resolution (default: sized to the
+    data by `planner.choose_tile_res`).
     """
     model = model or KrigingModel()
     data_coord_cols = data_coord_cols or ["x", "y"]
     query_coord_cols = query_coord_cols or ["cx", "cy"]
-    if minneighbors < 1:
-        raise ValueError("minneighbors must be >= 1")
-    if isinstance(data, DataFrame) and maxneighbors is not None:
-        from ..planner import choose_strategy, choose_tile_res
-
-        if strategy == "auto":
-            n_data = data.count()
-            strategy = choose_strategy(n_data, maxneighbors, broadcast_limit)
-            if tile_res is None:
-                tile_res = choose_tile_res(n_data)
-        if strategy == "local-tiled":
-            from .tiled import kriging_tiled
-
-            if minneighbors > maxneighbors:
-                raise ValueError("invalid min/max number of neighbors")
-            return kriging_tiled(
-                data, grid_df, var, model, data_coord_cols,
-                query_coord_cols, maxneighbors, minneighbors, metric,
-                radius, id_col, res=(tile_res if tile_res is not None else 6),
-                first_replicate=tiled_first_replicate,
-            )
+    schema = f"{id_col} long, {var} double, {var}_variance double"
+    kernel = kriging_kernel(model, var, metric, minneighbors, id_col)
+    if routes_tiled(data, maxneighbors, minneighbors, strategy,
+                    broadcast_limit):
+        return tiled.kriging_tiled(
+            grid_df, data.filter(f"{var} IS NOT NULL"), query_coord_cols,
+            data_coord_cols, [var], maxneighbors, kernel, schema,
+            metric=metric, radius=radius, res=tile_res, id_col=id_col,
+            first_replicate=tiled_first_replicate,
+        )
     if isinstance(data, DataFrame):
         data = collect_points(
             data.filter(f"{var} IS NOT NULL"),
@@ -360,7 +349,6 @@ def solve_kriging(
         raise ValueError(f"all samples of {var} are missing, aborting...")
 
     spark = grid_df.sparkSession
-    schema = f"{id_col} long, {var} double, {var}_variance double"
 
     if maxneighbors is None and radius is not None:
         # MetricBall-only neighborhood (KBallSearch with no k cap): the
@@ -396,16 +384,6 @@ def solve_kriging(
     k = min(maxneighbors, data.n)
     if minneighbors > k:
         raise ValueError("invalid min/max number of neighbors")
-
-    def kernel(pdf, d, idx, dist, nvalid):
-        q = pdf[query_coord_cols].to_numpy(np.float64)
-        mu, v = _solve_local_batch(
-            model, d, var, q, idx, dist, metric, minneighbors
-        )
-        return pd.DataFrame({
-            id_col: pdf[id_col].to_numpy(np.int64),
-            var: mu, f"{var}_variance": v,
-        })
 
     return local_apply(
         grid_df, data, query_coord_cols, k, metric, kernel, schema, radius

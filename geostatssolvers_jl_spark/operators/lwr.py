@@ -8,9 +8,11 @@ X = [1 coords], predict at the location, and report
 σ = ‖W·X·(XᵀWX)⁻¹·x₀‖₂ as ``var_variance`` (Gaussian-residual assumption,
 ``lwr.jl:50-51,142-143``).
 
-Spark realization: the shared zero-shuffle broadcast kernel — neighbor
-search and the stacked WLS solves fused in one vectorized mapInPandas
-pass; one batched ``np.linalg.solve`` over (B, p, p) normal matrices.
+Spark realization: `lwr_kernel` is the one local estimator (the
+`neighbors.Kernel` contract) — one batched ``np.linalg.solve`` over
+(B, p, p) normal matrices per Arrow batch.  `solve_lwr` calls it from
+either neighbour search: the zero-shuffle broadcast pass
+(`neighbors.local_apply`) or the tiled join (`tiled.tiled_local_apply`).
 """
 
 from __future__ import annotations
@@ -23,6 +25,8 @@ from pyspark.sql import DataFrame
 
 from ..distances import Distance, Euclidean
 from ..neighbors import PointData, collect_points, local_apply
+from ..planner import routes_tiled
+from . import tiled
 
 
 def default_weightfun(h: np.ndarray) -> np.ndarray:
@@ -59,17 +63,14 @@ def _wls_solve(
 
 
 def lwr_kernel(var: str, weightfun: Callable, minneighbors: int,
-               id_col: str = "cell_id", query_coord_cols: list[str] | None = None):
-    qcols = query_coord_cols or ["cx", "cy"]
+               id_col: str = "cell_id"):
+    """The local LWR estimator under the `neighbors.Kernel` contract,
+    called by both neighbour strategies."""
 
-    def kernel(pdf: pd.DataFrame, d: PointData, idx: np.ndarray,
-               dist: np.ndarray, nvalid: np.ndarray) -> pd.DataFrame:
-        B, k = idx.shape
-        dim = d.coords.shape[1]
-        p = dim + 1
-        z = d.values[var].astype(np.float64)
-        safe = np.maximum(idx, 0)
-        valid = idx >= 0
+    def kernel(pdf: pd.DataFrame, qcoords: np.ndarray, NC: np.ndarray,
+               vals: dict[str, np.ndarray], dist: np.ndarray,
+               valid: np.ndarray) -> pd.DataFrame:
+        B, k = valid.shape
         vm = valid.astype(np.float64)
 
         fd = np.where(valid, dist, 0.0)
@@ -78,18 +79,15 @@ def lwr_kernel(var: str, weightfun: Callable, minneighbors: int,
         delta = fd / dmax
         w = np.asarray(weightfun(delta), dtype=np.float64) * vm  # (B, k)
 
-        X = np.concatenate(
-            [np.ones((B, k, 1)), d.coords[safe]], axis=2
-        )  # (B, k, p)
+        X = np.concatenate([np.ones((B, k, 1)), NC], axis=2)  # (B, k, p)
         X = X * vm[:, :, None]
-        zn = z[safe] * vm  # (B, k)
+        zn = vals[var] * vm  # (B, k)
 
         WX = w[:, :, None] * X                     # (B, k, p)
         G = np.einsum("bkp,bkq->bpq", X, WX)       # XᵀWX (B, p, p)
         b = np.einsum("bkp,bk->bp", WX, zn)        # XᵀWz (B, p)
 
-        q = pdf[qcols].to_numpy(np.float64)
-        x0 = np.concatenate([np.ones((B, 1)), q], axis=1)  # (B, p)
+        x0 = np.concatenate([np.ones((B, 1)), qcoords], axis=1)  # (B, p)
 
         theta, Ginv_x0 = _wls_solve(G, b, x0)
 
@@ -97,7 +95,7 @@ def lwr_kernel(var: str, weightfun: Callable, minneighbors: int,
         r = WX @ Ginv_x0[:, :, None]               # W X (XᵀWX)⁻¹ x₀, (B,k,1)
         sigma = np.sqrt(np.einsum("bk,bk->b", r[:, :, 0], r[:, :, 0]))
 
-        few = nvalid < minneighbors
+        few = valid.sum(axis=1) < minneighbors
         mu = np.where(few, np.nan, mu)
         sigma = np.where(few, np.nan, sigma)
         return pd.DataFrame({
@@ -130,27 +128,16 @@ def solve_lwr(
     side above ``broadcast_limit`` through the distributed tiled join."""
     data_coord_cols = data_coord_cols or ["x", "y"]
     query_coord_cols = query_coord_cols or ["cx", "cy"]
-    if minneighbors < 1:
-        raise ValueError("minneighbors must be >= 1")
-    if isinstance(data, DataFrame) and maxneighbors is not None:
-        from ..planner import choose_strategy, choose_tile_res
-
-        if strategy == "auto":
-            n_data = data.count()
-            strategy = choose_strategy(n_data, maxneighbors, broadcast_limit)
-            if tile_res is None:
-                tile_res = choose_tile_res(n_data)
-        if strategy == "local-tiled":
-            from .tiled import lwr_tiled
-
-            if minneighbors > maxneighbors:
-                raise ValueError("invalid min/max number of neighbors")
-            return lwr_tiled(
-                data, grid_df, var, data_coord_cols, query_coord_cols,
-                maxneighbors, minneighbors, weightfun, metric, radius,
-                id_col, res=(tile_res if tile_res is not None else 6),
-                first_replicate=tiled_first_replicate,
-            )
+    kernel = lwr_kernel(var, weightfun, minneighbors, id_col)
+    schema = f"{id_col} long, {var} double, {var}_variance double"
+    if routes_tiled(data, maxneighbors, minneighbors, strategy,
+                    broadcast_limit):
+        return tiled.tiled_local_apply(
+            grid_df, data.filter(f"{var} IS NOT NULL"), query_coord_cols,
+            data_coord_cols, [var], maxneighbors, kernel, schema,
+            metric=metric, radius=radius, res=tile_res, id_col=id_col,
+            first_replicate=tiled_first_replicate,
+        )
     if isinstance(data, DataFrame):
         data = collect_points(
             data.filter(f"{var} IS NOT NULL"),
@@ -163,8 +150,6 @@ def solve_lwr(
     k = data.n if maxneighbors is None else min(maxneighbors, data.n)
     if minneighbors > k:
         raise ValueError("invalid min/max number of neighbors")
-    kernel = lwr_kernel(var, weightfun, minneighbors, id_col, query_coord_cols)
-    schema = f"{id_col} long, {var} double, {var}_variance double"
     return local_apply(
         grid_df, data, query_coord_cols, k, metric, kernel, schema, radius
     )

@@ -14,8 +14,9 @@ from __future__ import annotations
 import warnings
 from dataclasses import dataclass
 
+from pyspark.sql import DataFrame
+
 from .distances import Distance, Euclidean
-from .operators.kriging import KrigingModel
 
 
 @dataclass(frozen=True)
@@ -50,6 +51,7 @@ def kriging_ui(
 ) -> KrigingModel:
     """Latter options override former (ui.jl:40-50): drifts → EDK,
     degree → UK, mean → SK, else OK."""
+    from .operators.kriging import KrigingModel
     from .variogram import GaussianVariogram
 
     return KrigingModel(
@@ -84,6 +86,29 @@ def choose_strategy(n_data: int, maxneighbors: int | None,
     if n_data <= broadcast_limit:
         return "local-broadcast"
     return "local-tiled"
+
+
+def routes_tiled(data, maxneighbors: int | None, minneighbors: int,
+                 strategy: str, broadcast_limit: int) -> bool:
+    """The local solvers' one strategy preamble: check the neighbour
+    counts, then say whether the solve takes the tiled neighbour join
+    (`operators.tiled.tiled_local_apply`) instead of the broadcast one
+    (`neighbors.local_apply`) or, with ``maxneighbors=None``, the global
+    fit.  ``strategy``: 'auto' applies `choose_strategy` to the row count
+    of a DataFrame data side; 'local-broadcast' / 'local-tiled' force a
+    route.  Already-collected `PointData` always routes broadcast."""
+    if minneighbors < 1:
+        raise ValueError("minneighbors must be >= 1")
+    if maxneighbors is None:
+        return False
+    if minneighbors > maxneighbors:
+        raise ValueError("invalid min/max number of neighbors")
+    if not isinstance(data, DataFrame):
+        return False
+    if strategy == "auto":
+        strategy = choose_strategy(data.count(), maxneighbors,
+                                   broadcast_limit)
+    return strategy == "local-tiled"
 
 
 def choose_planes(n_vectors: int, bucket_target: int = 64,

@@ -122,6 +122,40 @@ def test_minneighbors_validation(spark, small):
                   minneighbors=-1)
 
 
+def test_broadcast_gather_3d_exact_at_data(spark):
+    """3-D (x, y, t) Euclidean data through the broadcast path: the
+    gathered neighbour coords are (B, k, 3), and a query placed on a datum
+    returns that datum — exactly for IDW (zero-distance rule), for
+    kriging up to the 1e-10·sill diagonal regularisation, with variance
+    0 to the same order."""
+    rng = np.random.default_rng(11)
+    n = 60
+    X = rng.uniform(0.0, 10.0, (n, 3))
+    z = rng.normal(5.0, 2.0, n)
+    d = spark.createDataFrame(
+        [(i, *map(float, X[i]), float(z[i])) for i in range(n)],
+        "data_id long, x double, y double, t double, z double",
+    )
+    on = list(range(0, n, 3))
+    q = spark.createDataFrame(
+        [(i, *map(float, X[i])) for i in on],
+        "cell_id long, cx double, cy double, ct double",
+    )
+    kw = dict(var="z", data_coord_cols=["x", "y", "t"],
+              query_coord_cols=["cx", "cy", "ct"], maxneighbors=6,
+              strategy="local-broadcast")
+    got = _rows(solve_idw(d, q, **kw))
+    assert sorted(got) == on
+    for i, (mu, dist) in got.items():
+        assert mu == round(z[i], 12) and dist == 0.0, i
+    model = KrigingModel(variogram=GaussianVariogram(range=4.0, sill=4.0))
+    got = _rows(solve_kriging(d, q, model=model, **kw))
+    assert sorted(got) == on
+    for i, (mu, var) in got.items():
+        assert mu == pytest.approx(z[i], abs=1e-8), i
+        assert var == pytest.approx(0.0, abs=1e-8), i
+
+
 def test_tiled_rejects_higher_dimensional_coords(spark, small):
     """3-D data through the tiled strategy must raise (the tiling is 2-D;
     silently dropping the third axis gave wrong neighbors)."""

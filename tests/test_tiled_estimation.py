@@ -7,7 +7,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from geostatssolvers_jl_spark.distances import Haversine
+from geostatssolvers_jl_spark.distances import Euclidean, Haversine
+from geostatssolvers_jl_spark.operators import idw, kriging, lwr, tiled
 from geostatssolvers_jl_spark.operators.idw import solve_idw
 from geostatssolvers_jl_spark.operators.kriging import (
     KrigingModel, solve_kriging,
@@ -115,6 +116,57 @@ def test_auto_strategy_routes_big_data_tiled(spark, geo, monkeypatch):
         strategy="auto", broadcast_limit=100, tile_res=4,
     )
     assert out.count() == 300
+
+
+def _boundary_case(geo, solver):
+    """(module, solve function, data, keyword args) for one solver."""
+    d, q = geo
+    hav = dict(data_coord_cols=["lon", "lat"],
+               query_coord_cols=["lon", "lat"], metric=Haversine(6371.0))
+    if solver == "kriging":
+        return kriging, kriging.solve_kriging, d, dict(
+            var="z", maxneighbors=6, **hav,
+            model=KrigingModel(
+                variogram=GaussianVariogram(range=2000.0, sill=9.0)))
+    if solver == "idw":
+        return idw, idw.solve_idw, d, dict(var="z", maxneighbors=5, **hav)
+    if solver == "lwr":
+        return lwr, lwr.solve_lwr, d, dict(var="z", maxneighbors=8, **hav)
+    comp = d.selectExpr(
+        "data_id", "lon", "lat",
+        "array(exp(z / 10.0), 1.0, exp(-z / 10.0)) AS z")
+    return idw, idw.solve_idw_compositional, comp, dict(
+        var="z", maxneighbors=4, data_coord_cols=["lon", "lat"],
+        query_coord_cols=["lon", "lat"], metric=Euclidean())
+
+
+@pytest.mark.parametrize("solver", ["kriging", "idw", "lwr",
+                                    "idw_compositional"])
+def test_auto_strategy_cutover_boundary(spark, geo, monkeypatch, solver):
+    """`planner.choose_strategy`'s cutover, on both sides of it: with
+    ``broadcast_limit = n_data`` 'auto' must route broadcast (the tiled
+    gather is never built), with ``n_data - 1`` tiled (the data side is
+    never collected, the tile resolution comes from the planner), and
+    the rows must be identical."""
+    import geostatssolvers_jl_spark.neighbors as nb
+
+    def boom(*a, **kw):  # pragma: no cover
+        raise AssertionError(f"{solver}: wrong route taken")
+
+    mod, solve, data, kw = _boundary_case(geo, solver)
+    q = geo[1]
+    n_data = data.count()
+    with monkeypatch.context() as m:
+        m.setattr(tiled, "tiled_local_apply", boom)
+        a = _rows(solve(data, q, strategy="auto", broadcast_limit=n_data,
+                        **kw))
+    with monkeypatch.context() as m:
+        m.setattr(mod, "collect_points", boom)
+        m.setattr(nb, "collect_points", boom)
+        b = _rows(solve(data, q, strategy="auto",
+                        broadcast_limit=n_data - 1, **kw))
+    assert len(a) == q.count()
+    assert a == b
 
 
 def test_tiled_plan_is_equijoin(spark, geo):
